@@ -5,7 +5,9 @@ import pytest
 
 # the reference library is the Tier-V oracle (read-only import, never copied)
 sys.path.insert(0, "/root/reference")
-sys.path.insert(0, "/root/repo")
+# this checkout, wherever it lives
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 
 @pytest.fixture(scope="session")

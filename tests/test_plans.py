@@ -231,3 +231,38 @@ class TestRound4NewOpPlans:
         out = neardup_conversations(t, threshold=0.5)
         p = plan_of(out)
         assert "EvalPython" not in p
+
+
+class TestPairKernelPlans:
+    @pytest.fixture()
+    def emb(self, spark):
+        return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("embedding"))
+
+    def test_semantic_dedup_pair_stage_one_arrow_group(self, emb):
+        """semantic_dedup's blocked pair stage (its cluster_assign +
+        cosine_neardup call) verifies in exactly one grouped Arrow node
+        and never round-trips through pandas."""
+        label = "__semdedup_cluster"
+        assigned = similarity.cluster_assign(emb, n_centroids=8,
+                                             out_col=label)
+        pairs = similarity.cosine_neardup(
+            assigned, threshold=0.9, block_cols=[label],
+            max_block_size=10_000, on_drop="ignore")
+        p = executed_plan_of(pairs)
+        final = p.split("== Initial Plan ==")[0]   # AQE echoes both
+        assert final.count("FlatMapGroupsInArrow") == 1, final
+        assert "FlatMapGroupsInPandas" not in p, p
+
+    def test_attach_fused_cosine_one_arrow_eval(self, emb):
+        a = emb.limit(20).select(
+            F.col("vec_id").alias("a"), F.col("embedding").alias("__va"),
+            similarity.l2_norm(F.col("embedding")).alias("__na"))
+        b = emb.limit(20).select(
+            F.col("vec_id").alias("b"), F.col("embedding").alias("__vb"),
+            similarity.l2_norm(F.col("embedding")).alias("__nb"))
+        out = similarity.attach_fused_cosine(a.crossJoin(b), "__va", "__vb",
+                                             "__na", "__nb")
+        final = executed_plan_of(out).split("== Initial Plan ==")[0]
+        assert final.count("ArrowEvalPython") == 1, final

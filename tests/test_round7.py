@@ -182,8 +182,8 @@ class TestLshBucketVerify:
 
     def test_nan_element_pair_is_kept_with_nan_sim(self, spark):
         """A NaN-element vector pairs with sim = NaN (Spark's NaN passes
-        `>= threshold`) — the Arrow boundary masks NaN to NULL, so this
-        pins the __isnan re-materialization."""
+        `>= threshold`) — this pins that the NaN crosses the Arrow
+        boundary as NaN, never as NULL."""
         v = [1.0, 0.0, 0.0, 0.0]
         df = _mk(spark, [(1, v), (2, v), (3, [NAN] + v[1:]),
                          (4, [NAN] + v[1:])])

@@ -46,6 +46,7 @@ from trafaret_spark.operators.colnames import temp_col
 from trafaret_spark.operators.hashing import (
     M31 as _M31, MULT as _MULT31, gram_combine, tok_hash,
 )
+from trafaret_spark.operators.pairkernel import grouped_pairs, jaccard_scorer
 
 __all__ = [
     "normalize_text", "shingles", "exact_dedup",
@@ -754,157 +755,6 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return verified.filter(F.col("jaccard") >= threshold)
 
 
-def _popcount64(x: "np.ndarray") -> "np.ndarray":
-    """Vectorized SWAR popcount over uint64 (numpy < 2.0 has no
-    bitwise_count)."""
-    m1 = np.uint64(0x5555555555555555)
-    m2 = np.uint64(0x3333333333333333)
-    m4 = np.uint64(0x0F0F0F0F0F0F0F0F)
-    h1 = np.uint64(0x0101010101010101)
-    x = x - ((x >> np.uint64(1)) & m1)
-    x = (x & m2) + ((x >> np.uint64(2)) & m2)
-    x = (x + (x >> np.uint64(4))) & m4
-    return (x * h1) >> np.uint64(56)
-
-
-# NULL-element sentinel: normalize_text strips control chars, so no real
-# shingle can equal it. NOT "\x00": pandas' factorize hash table is
-# C-string-keyed and truncates at NUL (\x00 would collide with "") — the
-# same reason this helper is only safe for normalize_text-derived
-# shingles, which can never contain embedded NULs.
-_NULL_SHINGLE = "\x01"
-
-
-def _grouped_jaccard_pairs(src: DataFrame, group_cols: Sequence[str],
-                           threshold: float, id_dtype) -> DataFrame:
-    """All-pairs exact set-Jaccard INSIDE each block group — the grouped
-    Arrow kernel replacing the blocked self-join + per-pair
-    ``array_intersect`` (which materialized ~Σ|block|² join rows each
-    carrying BOTH shingle-string arrays, then built two hash sets per
-    pair in the JVM).
-
-    ``src`` columns: [*group_cols, __id, __sh] with ``__sh`` =
-    ``shingles()`` output (distinct array<string>; a NULL *element*
-    matches another NULL element, as ``array_intersect`` does — mapped to
-    a reserved sentinel). Exactness: intersection/union are integer
-    counts; ``jaccard`` is the same single double division the expression
-    computed; a NULL __sh array (not producible by ``shingles`` but
-    defended) pairs with nothing, matching ``array_intersect(NULL, ·) →
-    NULL → filtered``; duplicate ids never pair (strict ``a < b``);
-    duplicate ROWS of one block pair per row, as the join did.
-
-    Two in-kernel strategies, chosen per group by vocabulary size:
-
-      * V ≤ 65 536: per-doc BITSET over the block vocabulary (≤ 8 KB/doc);
-        pair intersection = popcount(maskᵢ & maskⱼ), chunked over
-        ``_pair_index_blocks`` — the dominant case once blocks are capped.
-      * larger V: token-postings sweep — per shingle with df ≥ 2, emit
-        (i·m + j) pair keys in bounded chunks, partial ``np.unique``
-        counts, one sorted ``add.reduceat`` merge. Op count Σ df² never
-        exceeds the old per-pair set-probe cost Σ(|a|+|b|); memory is
-        bounded by the chunk size plus the distinct intersecting pairs.
-    """
-    from pyspark.sql import types as T
-    gcols = list(group_cols)
-    out_schema = T.StructType([
-        T.StructField("a", id_dtype), T.StructField("b", id_dtype),
-        T.StructField("jaccard", T.DoubleType())])
-    thr = float(threshold)
-    _CHUNK = 262_144
-
-    def _group_jac(pdf: pd.DataFrame) -> pd.DataFrame:
-        from trafaret_spark.operators.similarity import _pair_index_blocks
-        empty = pd.DataFrame({"a": pd.Series([], dtype=object),
-                              "b": pd.Series([], dtype=object),
-                              "jaccard": pd.Series([], dtype="float64")})
-        shs = pdf["__sh"].tolist()
-        good = [i for i, s in enumerate(shs) if s is not None]
-        m = len(good)
-        if m < 2:
-            return empty
-        gids = pdf["__id"].to_numpy()[good]
-        toks = [[_NULL_SHINGLE if t is None else t for t in shs[i]]
-                for i in good]
-        lens = np.fromiter((len(t) for t in toks), np.int64, m)
-        flat = np.concatenate(
-            [np.asarray(t, dtype=object) for t in toks]) \
-            if lens.sum() else np.empty(0, dtype=object)
-        tids = pd.factorize(flat)[0].astype(np.int64)  # exact, hash-based
-        doc_idx = np.repeat(np.arange(m, dtype=np.int64), lens)
-        V = int(tids.max()) + 1 if len(tids) else 0
-        out_a, out_b, out_j = [], [], []
-
-        def emit(pi, pj, inter):
-            union = lens[pi] + lens[pj] - inter
-            with np.errstate(divide="ignore", invalid="ignore"):
-                jac = inter.astype(np.float64) / union.astype(np.float64)
-            keep = (jac >= thr) & (gids[pi] != gids[pj])
-            if not keep.any():
-                return
-            ga, gb = gids[pi[keep]], gids[pj[keep]]
-            swap = gb < ga
-            out_a.append(np.where(swap, gb, ga))
-            out_b.append(np.where(swap, ga, gb))
-            out_j.append(jac[keep])
-
-        if V <= 65_536:
-            w = max(1, (V + 63) >> 6)
-            bits = np.zeros((m, w), dtype=np.uint64)
-            np.bitwise_or.at(
-                bits, (doc_idx, tids >> 6),
-                np.uint64(1) << (tids & 63).astype(np.uint64))
-            for ci, cj in _pair_index_blocks(m, _CHUNK):
-                inter = _popcount64(bits[ci] & bits[cj]).sum(
-                    axis=1).astype(np.int64)
-                emit(ci, cj, inter)
-        else:
-            order = np.argsort(tids, kind="stable")
-            st, sd = tids[order], doc_idx[order]
-            bounds = np.flatnonzero(np.r_[True, st[1:] != st[:-1]])
-            runs = np.r_[bounds, len(st)]
-            pk_parts, pc_parts = [], []
-            buf, buffered = [], 0
-
-            def flush():
-                nonlocal buf, buffered
-                if not buf:
-                    return
-                k, c = np.unique(np.concatenate(buf), return_counts=True)
-                pk_parts.append(k)
-                pc_parts.append(c)
-                buf, buffered = [], 0
-
-            for t in range(len(bounds)):
-                lo, hi = runs[t], runs[t + 1]
-                if hi - lo < 2:
-                    continue
-                docs = np.sort(sd[lo:hi])
-                for ci, cj in _pair_index_blocks(hi - lo, _CHUNK):
-                    buf.append(docs[ci] * m + docs[cj])
-                    buffered += len(ci)
-                    if buffered >= _CHUNK:
-                        flush()
-            flush()
-            if pk_parts:
-                K = np.concatenate(pk_parts)
-                C = np.concatenate(pc_parts)
-                o = np.argsort(K, kind="stable")
-                K, C = K[o], C[o]
-                b2 = np.flatnonzero(np.r_[True, K[1:] != K[:-1]])
-                inter = np.add.reduceat(C, b2).astype(np.int64)
-                pk = K[b2]
-                emit(pk // m, pk % m, inter)
-
-        if not out_a:
-            return empty
-        return pd.DataFrame({"a": np.concatenate(out_a),
-                             "b": np.concatenate(out_b),
-                             "jaccard": np.concatenate(out_j)})
-
-    return src.groupBy(*gcols).applyInPandas(_group_jac, out_schema) \
-        .filter(F.col("jaccard") >= threshold)
-
-
 def ngram_jaccard_pairs(df: DataFrame, block_cols: Sequence[str],
                         text_col: str = "text", id_col: str = "doc_id",
                         threshold: float = 0.8, n: int = 1,
@@ -923,9 +773,12 @@ def ngram_jaccard_pairs(df: DataFrame, block_cols: Sequence[str],
     banding IS the blocking; this operator is its verify stage exposed
     standalone).
 
-    The self-join shuffles both sides once on ``block_cols``; shingle
-    arrays are materialized scan-side before the join so each document is
-    shingled once, not once per pair. The block-size guard is
+    Shingle arrays are materialized scan-side, so each document is
+    shingled once, and ONE exchange on ``block_cols`` moves them once; the
+    quadratic pair set exists only inside the grouped Arrow kernel (bitset
+    or postings set Jaccard), never as join rows carrying two shingle
+    arrays. Exactness against the self-join + ``array_intersect``
+    expression is the :mod:`pairkernel` contract. The block-size guard is
     :func:`capped_blocks` — dropped hot blocks are surfaced per
     ``on_drop`` (default: a warning with the drop count), never silent.
     """
@@ -934,17 +787,8 @@ def ngram_jaccard_pairs(df: DataFrame, block_cols: Sequence[str],
                    shingles(F.col(text_col), n=n).alias("__sh"))
     if max_block_size is not None:
         sh = capped_blocks(sh, block_cols, max_block_size, on_drop=on_drop)
-    # the old USING-self-join never matched NULL block keys; the groupBy
-    # underneath the kernel would, so drop them to keep pair sets equal
-    for c in block_cols:
-        sh = sh.filter(F.col(c).isNotNull())
-    # in-block grouped verify (round 7, guide §2.3/§8): the quadratic
-    # pair set — previously the self-join's output, each row carrying two
-    # full shingle-string arrays into a per-pair array_intersect — exists
-    # only inside the Arrow kernel; one exchange moves each doc's
-    # shingles once
-    return _grouped_jaccard_pairs(sh, list(block_cols), threshold,
-                                  df.schema[id_col].dataType)
+    return grouped_pairs(sh, list(block_cols), jaccard_scorer(threshold),
+                         "jaccard", emit_keys=False, nonnull=("__sh",))
 
 
 def simhash(col: Column, bits: int = 32, n: int = 1, seed: int = 99,

@@ -13,11 +13,13 @@ Two paths over ``array<float>`` embeddings:
                            path: shuffle is on uniform bucket hashes, corpus
                            scanned once.
 
-Exact scoring stays JVM-side (native zip_with/aggregate). LSH bucketing is
-the one Arrow-batched kernel: a seed-deterministic Rademacher ({-1,+1})
-plane matrix multiply over fixed-point-quantized vectors per batch (see
-``lsh_band_buckets``) — the sanctioned pandas-UDF path where a per-element
-Column fold would be interpreted-eval per row. Integer projection makes the
+Exact scoring of ``array<float>`` stays JVM-side (native zip_with/
+aggregate); ``array<double>`` pairs are scored by the Arrow pair kernel
+(:mod:`pairkernel`), bit-exact against that expression. LSH bucketing is
+an Arrow-batched kernel: a seed-deterministic Rademacher ({-1,+1}) plane
+matrix multiply over fixed-point-quantized vectors per batch (see
+``lsh_band_buckets``) — where a per-element Column fold would be
+interpreted-eval per row. Integer projection makes the
 sign bits exactly reproducible across engines and summation orders, which
 is what lets the driver's DuckDB oracle recompute the buckets.
 """
@@ -25,11 +27,13 @@ is what lets the driver's DuckDB oracle recompute the buckets.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from trafaret_spark.operators.hashing import rademacher_planes
+from trafaret_spark.operators.pairkernel import (
+    cosine_scorer, grouped_pairs, list_matrix, pair_dot)
 
 QUANT_SCALE = 1_000_000  # fixed-point quantization: q = floor(x * SCALE)
 
@@ -67,102 +71,16 @@ def _vec_is_double(df: DataFrame, vec_col: str) -> bool:
             and isinstance(dt.elementType, T.DoubleType))
 
 
-def _pair_dot(a: Column, b: Column) -> Column:
-    """Exact dot product of two array<double> columns, fused into ONE
-    Arrow kernel — bit-identical to ``dot(a, b)``'s strict left fold.
-
-    The JVM expression ``aggregate(zip_with(a,b,(x,y)->x*y), 0.0, +)``
-    evaluates ~2·dim interpreted higher-order-function lambdas PER ROW —
-    the dominant cost of every pair-verify stage once candidates number
-    in the millions (round-7 profile: 25.7M LSH candidate pairs × dim 64
-    ≈ 3.3G lambda evals). Here each Arrow batch is two (rows × dim)
-    float64 matrices; the fold runs as ``dim`` vectorized column adds in
-    ASCENDING index order — the same IEEE-754 operation sequence
-    (products first, then left-to-right accumulation from +0.0) the JVM
-    fold performs, so results are bit-exact, not just close.
-
-    Boundary contract (callers must reconstruct NULL/NaN JVM semantics —
-    see :func:`_fused_cosine`): rows where either side is absent or
-    lengths differ return NULL; Arrow masks a genuine NaN result to NULL
-    on the way back, and array-element NULLs arrive as NaN, so the
-    kernel alone cannot distinguish those cases — the reconstruction
-    does, from cheap native ``size``/``isNull`` predicates.
-    """
-    @F.pandas_udf("double")
-    def _dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        n = len(va)
-        if n == 0:
-            return pd.Series([], dtype="float64")
-        ra, rb = va.tolist(), vb.tolist()
-        out = np.full(n, np.nan, dtype=np.float64)
-        keep = np.zeros(n, dtype=bool)
-        groups: dict[int, list[int]] = {}
-        for i in range(n):
-            x, y = ra[i], rb[i]
-            if x is None or y is None or len(x) != len(y):
-                continue
-            groups.setdefault(len(x), []).append(i)
-        for d, idxs in groups.items():
-            ix = np.asarray(idxs, dtype=np.int64)
-            keep[ix] = True
-            if d == 0:
-                out[ix] = 0.0          # fold over an empty array -> 0.0
-                continue
-            A = np.vstack([np.asarray(ra[i], dtype=np.float64)
-                           for i in idxs])
-            B = np.vstack([np.asarray(rb[i], dtype=np.float64)
-                           for i in idxs])
-            prod = A * B
-            acc = np.zeros(len(ix), dtype=np.float64)
-            for j in range(d):                  # strict left fold — the
-                acc += prod[:, j]               # JVM aggregate()'s order
-            out[ix] = acc
-        res = pd.Series(out)
-        res[~keep] = None
-        return res
-
-    # the optimizer may not push a `sim >= t` filter below the Arrow node
-    # and re-evaluate the kernel twice (guide §4.4 duplication trap)
-    return _dot.asNondeterministic()(a, b)
-
-
 def attach_fused_cosine(df: DataFrame, a: str, b: str, na: str, nb: str,
                         out: str = "sim") -> DataFrame:
     """Attach ``out`` = ``cosine(df[a], df[b])`` with the dot in the
-    fused Arrow kernel and the norms precomputed ONCE PER VECTOR
-    (``na``/``nb`` = ``l2_norm`` of each side, attached at corpus
-    cardinality, not per pair).
-
-    Bit-exact reconstruction of ``try_divide(dot, l2a*l2b)`` including
-    every NULL/NaN case the HOF expression produces:
-
-      * absent side / length mismatch → the first WHEN yields NULL dot
-        (zip_with pads the shorter side with NULL → NULL fold);
-      * a NULL *element* → that side's norm is NULL → try_divide by a
-        NULL denominator → NULL, regardless of the kernel's NaN-masked
-        dot — exactly the HOF result;
-      * a genuine NaN dot (NaN/Inf elements) is masked to NULL at the
-        Arrow boundary; since the row is same-length/non-absent, kernel
-        NULL ⇔ NaN there, and the second WHEN restores it;
-      * zero denominator → try_divide → NULL in both ANSI modes.
-
-    The kernel column is materialized in its own projection and
-    referenced (not re-evaluated) by the WHEN branches; the UDF is
-    nondeterministic, so CollapseProject cannot inline it into multiple
-    uses and the plan carries exactly one ArrowEvalPython node.
-    """
-    dk = "__fdot"
-    i = 0
-    while dk in df.columns:
-        dk, i = f"__fdot{i}", i + 1
-    df2 = df.withColumn(dk, _pair_dot(F.col(a), F.col(b)))
-    mismatch = (F.col(a).isNull() | F.col(b).isNull()
-                | (F.size(F.col(a)) != F.size(F.col(b))))
-    dot_rec = (F.when(mismatch, F.lit(None).cast("double"))
-               .when(F.col(dk).isNull(), F.lit(float("nan")))
-               .otherwise(F.col(dk)))
-    return df2.withColumn(
-        out, F.try_divide(dot_rec, F.col(na) * F.col(nb))).drop(dk)
+    fused Arrow kernel (:func:`pairkernel.pair_dot`) and the norms
+    precomputed ONCE PER VECTOR (``na``/``nb`` = ``l2_norm`` of each side,
+    attached at corpus cardinality, not per pair): ``try_divide(dot,
+    na * nb)``, bit-exact under the :mod:`pairkernel` contract. The plan
+    carries exactly one ArrowEvalPython node."""
+    dot_ = pair_dot(F.col(a), F.col(b))
+    return df.withColumn(out, F.try_divide(dot_, F.col(na) * F.col(nb)))
 
 
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -264,6 +182,13 @@ def cosine_neardup(df: DataFrame, threshold: float = 0.9,
     """
     fused = _vec_is_double(df, vec_col)
     if block_cols:
+        from trafaret_spark.operators.dedup import capped_blocks
+        blocks = [F.col(c) for c in block_cols]
+        v = df.select(F.col(id_col).alias("__id"), *blocks,
+                      F.col(vec_col).alias("__v"))
+        if max_block_size is not None:
+            v = capped_blocks(v, list(block_cols), max_block_size,
+                              on_drop=on_drop)
         if fused:
             # In-block verify (guide §2.3/§8: decide with batches, never
             # materialize candidate-pair payloads): the quadratic pair
@@ -271,31 +196,13 @@ def cosine_neardup(df: DataFrame, threshold: float = 0.9,
             # output carrying two vectors per candidate row, no 2·dim
             # interpreted HOF lambda evals per pair. Same kernel as the
             # LSH path; the group key is the block instead of the bucket.
-            from trafaret_spark.operators.dedup import capped_blocks
-            v = df.select(F.col(id_col).alias("__id"),
-                          *[F.col(c) for c in block_cols],
-                          F.col(vec_col).alias("__v"))
-            if max_block_size is not None:
-                v = capped_blocks(v, list(block_cols), max_block_size,
-                                  on_drop=on_drop)
-            # a USING-join never matches NULL block keys; the groupBy
-            # below would, so drop them to keep pair sets identical
-            for c in block_cols:
-                v = v.filter(F.col(c).isNotNull())
-            v = v.select("*", l2_norm(F.col("__v")).alias("__n"),
-                         l2_norm(F.col("__v")).isNull().alias("__bad"))
-            return _grouped_pair_verify(
-                v, list(block_cols), threshold,
-                df.schema[id_col].dataType,
-                emit_group_cols=True, dedup_pairs=False)
-        blocks = [F.col(c) for c in block_cols]
-        v = df.select(F.col(id_col), *blocks, F.col(vec_col).alias("__v"))
-        if max_block_size is not None:
-            from trafaret_spark.operators.dedup import capped_blocks
-            v = capped_blocks(v, block_cols, max_block_size, on_drop=on_drop)
-        a = v.select(F.col(id_col).alias("a"), *blocks,
+            v = v.withColumn("__n", l2_norm(F.col("__v")))
+            return grouped_pairs(v, list(block_cols),
+                                 cosine_scorer(threshold), "sim",
+                                 emit_keys=True, nonnull=("__n",))
+        a = v.select(F.col("__id").alias("a"), *blocks,
                      F.col("__v").alias("__va"))
-        b = v.select(F.col(id_col).alias("b"), *blocks,
+        b = v.select(F.col("__id").alias("b"), *blocks,
                      F.col("__v").alias("__vb"))
         pairs = a.join(b, list(block_cols)).filter(F.col("a") < F.col("b"))
     else:
@@ -330,24 +237,6 @@ def cosine_neardup(df: DataFrame, threshold: float = 0.9,
             .drop("__va", "__vb"))
 
 
-def _pair_index_blocks(m: int, chunk: int):
-    """Yield (i, j) index blocks covering all i < j < m, never holding
-    more than ~``chunk`` pairs in memory — the streaming replacement for
-    ``np.triu_indices`` (which materializes all m·(m-1)/2 indices at
-    once: 3 GB for a single 20k-row hot bucket)."""
-    ci_parts, cj_parts, cnt = [], [], 0
-    for i in range(m - 1):
-        n_i = m - 1 - i
-        ci_parts.append(np.full(n_i, i, dtype=np.int64))
-        cj_parts.append(np.arange(i + 1, m, dtype=np.int64))
-        cnt += n_i
-        if cnt >= chunk:
-            yield np.concatenate(ci_parts), np.concatenate(cj_parts)
-            ci_parts, cj_parts, cnt = [], [], 0
-    if cnt:
-        yield np.concatenate(ci_parts), np.concatenate(cj_parts)
-
-
 def _lsh_bucket_verify(df: DataFrame, threshold: float, id_col: str,
                        vec_col: str, nbits: int, bands: int, seed: int,
                        dim: int | None) -> DataFrame:
@@ -356,172 +245,27 @@ def _lsh_bucket_verify(df: DataFrame, threshold: float, id_col: str,
     over ``array<double>`` vectors.
 
     Plan: band scan-side (narrow ``(id, vec, l2norm)`` rows fanned out
-    ``bands``×), ONE exchange on the uniform (band, bucket) key, then a
-    grouped Arrow kernel emits each bucket's surviving pairs directly.
-    The Σ|bucket|² candidate set exists only as numpy temporaries inside
-    the kernel — no join output, no wide distinct, and the Python
-    boundary moves |rows|·bands vectors in and ~|survivors| narrow rows
-    out. Cross-band duplicates collapse in a final narrow hash distinct.
-
-    Exactness vs the expression form ``try_divide(dot(a,b),
-    l2(a)*l2(b)) >= threshold``:
-
-      * dot is a strict left fold over element products (ascending-index
-        vectorized adds) — bit-identical to ``aggregate``'s order;
-      * norms are the JVM ``l2_norm`` values computed once per banded row
-        and shipped in, so the denominator is the same two doubles;
-      * a NULL norm (NULL element somewhere in the vector) marks the row
-        invalid — every pair touching it has a NULL denominator → NULL
-        sim → dropped, exactly the JVM filter's fate for it. The flag
-        must be computed JVM-side because pandas folds NULL and NaN
-        together;
-      * a NaN sim (NaN element) passes Spark's ``>= threshold`` (NaN is
-        greatest), so the kernel keeps it and flags ``__isnan`` — the
-        NaN is re-materialized JVM-side because Arrow masks a returned
-        NaN to NULL;
-      * pairs of different dims → NULL sim (zip_with pads) → dropped:
-        the kernel only pairs within equal-length groups;
-      * duplicate ids never pair (the old ``a < b`` is strict).
-
-    Memory: one bucket's vectors plus ~``_PAIR_CHUNK``·dim pair rows per
-    task — bound bucket sizes via ``nbits`` (the same dial that bounds
-    the old formulation's join fan-out).
+    ``bands``×), ONE exchange on the uniform (band, bucket) key, then the
+    grouped Arrow kernel (:func:`pairkernel.grouped_pairs` with the exact
+    cosine scorer) emits each bucket's surviving pairs directly. The
+    Σ|bucket|² candidate set exists only as numpy temporaries inside the
+    kernel — no join output, no wide distinct, and the Python boundary
+    moves |rows|·bands vectors in and ~|survivors| narrow rows out.
+    Cross-band duplicates collapse in a final narrow hash distinct.
+    Exactness vs ``try_divide(dot(a,b), l2(a)*l2(b)) >= threshold``: the
+    :mod:`pairkernel` contract. Memory: one bucket's vectors plus one
+    pair chunk per task — bound bucket sizes via ``nbits`` (the same dial
+    that bounds the old formulation's join fan-out).
     """
     banded = df.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"),
         l2_norm(F.col(vec_col)).alias("__n"),
-        l2_norm(F.col(vec_col)).isNull().alias("__bad"),
         F.posexplode(lsh_band_buckets(F.col(vec_col), nbits, bands,
                                       seed, dim=dim))
         .alias("band", "bucket"))
-    return _grouped_pair_verify(banded, ["band", "bucket"], threshold,
-                                df.schema[id_col].dataType,
-                                emit_group_cols=False, dedup_pairs=True)
-
-
-def _grouped_pair_verify(src: DataFrame, group_cols: "list[str]",
-                         threshold: float, id_dtype,
-                         emit_group_cols: bool,
-                         dedup_pairs: bool) -> DataFrame:
-    """Shared grouped-kernel pair verify: ``src`` has columns
-    [*group_cols, __id, __v, __n, __bad]; one exchange on the group key,
-    then each group's all-pairs exact-cosine runs inside the Arrow
-    kernel, emitting only pairs that survive ``sim >= threshold`` (NaN
-    sims kept, Spark-style). See :func:`_lsh_bucket_verify` for the
-    exactness contract. ``emit_group_cols`` prepends the group's key
-    values to each output row (the blocked path's output contract);
-    ``dedup_pairs`` collapses cross-group duplicates (the multi-band
-    LSH path)."""
-    from pyspark.sql import types as T
-    gcols = list(group_cols)
-    fields = ([src.schema[c] for c in gcols] if emit_group_cols else [])
-    fields += [T.StructField("a", id_dtype), T.StructField("b", id_dtype),
-               T.StructField("sim", T.DoubleType()),
-               T.StructField("__isnan", T.BooleanType())]
-    out_schema = T.StructType(fields)
-    thr = float(threshold)
-    emit = emit_group_cols
-    _PAIR_CHUNK = 262_144
-
-    def _group_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["__id"].to_numpy()
-        vs = pdf["__v"].tolist()
-        norms = pdf["__n"].to_numpy(dtype=np.float64, na_value=np.nan)
-        bad = pdf["__bad"].to_numpy(dtype=bool)
-        by_len: dict[int, list[int]] = {}
-        for i, v in enumerate(vs):
-            if not bad[i]:
-                by_len.setdefault(len(v), []).append(i)
-        out_a, out_b, out_s, out_nan = [], [], [], []
-        for d, idxs in by_len.items():
-            m = len(idxs)
-            if m < 2:
-                continue
-            ix = np.asarray(idxs, dtype=np.int64)
-            A = (np.vstack([vs[i] for i in idxs]) if d
-                 else np.zeros((m, 0), dtype=np.float64))
-            # dim-major layout: the exact fold gathers from one
-            # cache-resident m-vector per dimension instead of
-            # materializing (pairs × d) matrices
-            AT = np.ascontiguousarray(A.T)
-            absA = np.abs(A)
-            nn = norms[ix]
-            gids = ids[ix]
-            # BLAS prefilter with a RIGOROUS error margin (~30× less
-            # work than folding every pair): a dgemm dot G and the exact
-            # left-fold X both differ from the true dot by at most
-            # γ_d·Σ|aᵢbᵢ| (standard fp summation bound, γ_d ≈ d·u), so
-            # |G − X| ≤ 2γ_d·S with S = Σ|aᵢbᵢ| — computed as a second
-            # matmul on |A|. A pair can only satisfy fl(X/den) ≥ t (or
-            # be NaN) if G + margin ≥ t·den, with the margin inflated 2×
-            # for the fp error of S/t·den themselves and a 4-ulp slack
-            # on the comparison; non-finite G/S/den are always sent to
-            # the exact path (NaN/Inf semantics live there). Only the
-            # provable-superset survivors get the bit-exact fold.
-            gamma4 = 4.0 * d * 1.1102230246251565e-16  # 4·d·u
-            rb = max(1, _PAIR_CHUNK // m)
-            for r0 in range(0, m - 1, rb):
-                r1 = min(r0 + rb, m - 1)
-                rows = np.arange(r0, r1, dtype=np.int64)
-                G = A[r0:r1] @ A.T
-                S = absA[r0:r1] @ absA.T
-                counts = m - 1 - rows
-                ci = np.repeat(rows, counts)
-                cj = np.concatenate(
-                    [np.arange(r + 1, m, dtype=np.int64) for r in rows])
-                gi = ci - r0
-                g, s = G[gi, cj], S[gi, cj]
-                den = nn[ci] * nn[cj]
-                rhs = thr * den
-                with np.errstate(invalid="ignore", over="ignore"):
-                    sel = (g + gamma4 * s
-                           >= rhs - 9.0e-16 * np.abs(rhs))
-                    sel |= (~np.isfinite(g) | ~np.isfinite(s)
-                            | ~np.isfinite(den))
-                if not sel.any():
-                    continue
-                ci, cj, den = ci[sel], cj[sel], den[sel]
-                acc = np.zeros(len(ci), dtype=np.float64)
-                for k in range(d):          # strict left fold — the JVM
-                    col = AT[k]             # aggregate()'s order: products
-                    acc += col[ci] * col[cj]  # per dim, added ascending
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sims = acc / den
-                isn = np.isnan(sims)
-                keep = ((den != 0.0) & ((sims >= thr) | isn)
-                        & (gids[ci] != gids[cj]))
-                if not keep.any():
-                    continue
-                ga, gb = gids[ci[keep]], gids[cj[keep]]
-                swap = gb < ga
-                ga, gb = np.where(swap, gb, ga), np.where(swap, ga, gb)
-                out_a.append(ga)
-                out_b.append(gb)
-                out_s.append(sims[keep])
-                out_nan.append(isn[keep])
-        if not out_a:
-            data = {g: pdf[g].iloc[0:0] for g in gcols} if emit else {}
-            data.update({"a": pd.Series([], dtype=object),
-                         "b": pd.Series([], dtype=object),
-                         "sim": pd.Series([], dtype="float64"),
-                         "__isnan": pd.Series([], dtype=bool)})
-            return pd.DataFrame(data)
-        a_all, n_out = np.concatenate(out_a), sum(len(x) for x in out_a)
-        data = ({g: pd.Series([pdf[g].iloc[0]] * n_out) for g in gcols}
-                if emit else {})
-        data.update({"a": a_all, "b": np.concatenate(out_b),
-                     "sim": np.concatenate(out_s),
-                     "__isnan": np.concatenate(out_nan)})
-        return pd.DataFrame(data)
-
-    verified = src.groupBy(*gcols).applyInPandas(_group_pairs, out_schema)
-    out = (verified
-           .withColumn("sim", F.when(F.col("__isnan"), F.lit(float("nan")))
-                       .otherwise(F.col("sim")))
-           .drop("__isnan"))
-    if dedup_pairs:
-        out = out.dropDuplicates(["a", "b"])
-    return out.filter(F.col("sim") >= threshold)
+    return grouped_pairs(banded, ["band", "bucket"],
+                         cosine_scorer(threshold), "sim", emit_keys=False,
+                         nonnull=("__n",)).dropDuplicates(["a", "b"])
 
 
 def embedding_band_index(df: DataFrame, id_col: str = "vec_id",
@@ -682,27 +426,22 @@ def lsh_band_buckets(vec: Column, nbits: int = 12, bands: int = 1,
     total = bands * nbits
     weights = (1 << np.arange(nbits - 1, -1, -1, dtype=np.int64))
 
-    @F.pandas_udf("array<long>")
-    def _buckets(v: pd.Series) -> pd.Series:
-        n = len(v)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        raw = v.tolist()
-        d = dim or max((len(a) for a in raw if a is not None), default=0)
-        null_mask = [a is None or len(a) != d for a in raw]
+    @F.arrow_udf("array<long>")
+    def _buckets(v: pa.Array) -> pa.Array:
+        mat, ok = list_matrix(v, dim)                       # batch × dim
+        n, d = mat.shape
         if d == 0:
-            return pd.Series([None] * n)
-        mat = np.zeros((n, d), dtype=np.float64)            # batch × dim
-        for i, (a, m) in enumerate(zip(raw, null_mask)):
-            if not m:
-                mat[i] = a
+            return pa.nulls(n, pa.list_(pa.int64()))
         q = np.floor(mat * QUANT_SCALE).astype(np.int64)
         planes = rademacher_planes(d, total, seed)          # dim × bands·nbits
         signs = (q @ planes) > 0                            # batch × total
         keys = np.einsum("rbn,n->rb",
                          signs.reshape(n, bands, nbits).astype(np.int64),
                          weights)
-        return pd.Series([None if null_mask[i] else keys[i] for i in range(n)])
+        offsets = np.arange(0, n * bands + 1, bands, dtype=np.int32)
+        return pa.ListArray.from_arrays(pa.array(offsets),
+                                        pa.array(keys.ravel()),
+                                        mask=pa.array(~ok))
 
     return _buckets(vec)
 
@@ -937,16 +676,14 @@ def ivf_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                               F.col(vec_col).alias("__qv")),
                query_id_col, "__qv", nprobe)
     if _vec_is_double(corpus, vec_col) and _vec_is_double(queries, vec_col):
-        # distinct over narrow id pairs, not vector-carrying rows (array
-        # payloads force a sort-based aggregate); vectors and their
-        # once-per-vector norms re-attach at candidate cardinality and
-        # the verify runs in the fused Arrow dot kernel
-        cand = (q.select(query_id_col, "__cid").join(
-                    c.select(id_col, "__cid"), "__cid")
-                .dropDuplicates([query_id_col, id_col]))
-        # vectors + norms re-attach from the ORIGINAL inputs (one row per
-        # id — the nprobe explode only fans out the assign side), so no
-        # wide dedup of vector-carrying rows is ever needed
+        # vectors and their once-per-vector norms re-attach from the
+        # ORIGINAL inputs at candidate cardinality and the verify runs in
+        # the fused Arrow dot kernel. A query's nprobe lists are disjoint,
+        # so only a duplicated input id (or centroid) repeats a (query,
+        # id) pair: one distinct over the narrow scored rows keeps one
+        # rank slot per pair, as the vector-carrying path's distinct does
+        cand = q.select(query_id_col, "__cid").join(
+            c.select(id_col, "__cid"), "__cid")
         qn = queries.select(F.col(query_id_col),
                             F.col(vec_col).alias("__qv"),
                             l2_norm(F.col(vec_col)).alias("__qn"))
@@ -955,7 +692,8 @@ def ivf_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         scored = attach_fused_cosine(
             cand.join(qn, query_id_col).join(cn, id_col),
             "__qv", "__cvv", "__qn", "__cn") \
-            .select(query_id_col, id_col, "sim")
+            .select(query_id_col, id_col, "sim") \
+            .dropDuplicates([query_id_col, id_col])
     else:
         cand = (q.join(c, "__cid")
                 .dropDuplicates([query_id_col, id_col]))
@@ -997,7 +735,10 @@ def lsh_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         # narrow band join + narrow (query, id) distinct — the multi-band
         # duplicate collapse never moves or sorts vector payloads; vectors
         # and once-per-vector norms re-attach at candidate cardinality and
-        # the verify runs in the fused Arrow dot kernel
+        # the verify runs in the fused Arrow dot kernel. A duplicated
+        # input id re-expands a pair at the re-attach, so the narrow
+        # scored rows are made distinct again (no new exchange: they are
+        # still partitioned by the first distinct's key)
         c = banded(corpus, id_col, False)
         q = banded(queries, query_id_col, False)
         cand = (c.join(q, ["band", "bucket"])
@@ -1011,7 +752,8 @@ def lsh_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         scored = attach_fused_cosine(
             cand.join(qn, query_id_col).join(cn, id_col),
             "__qv", "__cv", "__qn", "__cn") \
-            .select(query_id_col, id_col, "sim")
+            .select(query_id_col, id_col, "sim") \
+            .dropDuplicates([query_id_col, id_col])
     else:
         c = banded(corpus, id_col, True)
         q = banded(queries, query_id_col, True)
